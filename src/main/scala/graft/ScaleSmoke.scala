@@ -56,15 +56,7 @@ object ScaleSmoke {
     val phaseRe = args.lift(3)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       math.max(4, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.create(s"local[$cpus]")
     run(spark, baseDir, factor, outFile, phaseRe)
     spark.stop()
   }
@@ -81,8 +73,14 @@ object ScaleSmoke {
           only: Option[String] = None): Seq[(String, Double, Long, Long, Long, Long, Long)] = {
     val listener = new MetricsListener
     spark.sparkContext.addSparkListener(listener)
+    try Scratch.withDir("graft_scale")(work =>
+      runIn(spark, work, listener, baseDir, factor, outFile, only))
+    finally spark.sparkContext.removeSparkListener(listener)
+  }
 
-    val work = java.nio.file.Files.createTempDirectory("graft_scale").toString
+  private def runIn(spark: SparkSession, work: String, listener: MetricsListener,
+      baseDir: String, factor: Int, outFile: String,
+      only: Option[String]): Seq[(String, Double, Long, Long, Long, Long, Long)] = {
     val phases = scala.collection.mutable.ArrayBuffer[(String, Double, Long, Long, Long, Long, Long)]()
     // after a FATAL throwable (OOM, linkage...) the JVM may be degraded:
     // later phases still run and record, but are marked tainted in the
@@ -638,10 +636,6 @@ object ScaleSmoke {
     println(line)
     java.nio.file.Files.write(java.nio.file.Paths.get(outFile),
       line.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    new org.apache.hadoop.fs.Path(work)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(new org.apache.hadoop.fs.Path(work), true)
-    spark.sparkContext.removeSparkListener(listener)
     phases.toSeq
   }
 }

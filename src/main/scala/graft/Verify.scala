@@ -24,14 +24,25 @@ object Verify {
         Files.writeString(d.resolve("_ERROR"),
           s"${e.getClass.getName}: ${e.getMessage}\n")
       }
-      spark.sharedState.cacheManager.clearCache()
-      // checkpoint-backed scratch queries (repair/bloom/snapshot/index
-      // tiers) leave localCheckpoint RDD blocks behind; free them NOW
-      // rather than waiting on the ContextCleaner so the dump's heap
-      // stays flat across 90+ queries (same hygiene as Bench)
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      dropStreamSinks(spark)
+      cleanup(spark)
     }
+  }
+
+  /** Between-query session hygiene, shared by this dump and Bench's
+    * timed passes. Leftover cached frames and checkpoint/persisted RDDs
+    * (clearCache misses the latter; every journey leaves a
+    * localCheckpoint behind) compound in the old gen and made later
+    * queries run 10-30x their isolated cost. Stream memory sinks hold
+    * their rows until dropped. Every streaming query also leaves its
+    * state-store providers cached with a shared maintenance thread
+    * sweeping them; `StateStore.stop()` unloads them, and the next
+    * streaming query restarts both from empty.
+    */
+  private[graft] def cleanup(spark: SparkSession): Unit = {
+    spark.sharedState.cacheManager.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+    dropStreamSinks(spark)
+    org.apache.spark.sql.execution.streaming.state.StateStore.stop()
   }
 
   /** Memory-sink tables registered by stream queries hold their rows
@@ -46,19 +57,7 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet's ts encoding drifts across testdata generations
-      // (nanos in r<=9, micros since r10). nanosAsLong makes a nanos file
-      // readable (as long); SparkEntry.decodeEventsTs branches on the
-      // loaded dtype either way. Harmless for micros files.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.create(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
     val only = sys.env.get("SPARK_GRAFT_ONLY") // debug: regex filter on query names
     dumpQueries(spark, sfDir, outDir,
       SparkEntry.queries.filter { case (n, _) => only.forall(n.matches) })

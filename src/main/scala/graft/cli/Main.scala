@@ -94,14 +94,7 @@ object Main {
 
   def main(args: Array[String]): Unit = {
     val cmd = args.headOption.getOrElse("help")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.create(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
     try run(spark, cmd, args.drop(1)) finally spark.stop()
   }
 

@@ -50,38 +50,58 @@ class VerifyContractSpec extends AnyFunSuite {
     spark.catalog.dropTempView("user_view_sink")
   }
 
-  test("bench stage journeys are pinned, known, integration-tier queries") {
-    assert(Bench.stageJourneyNames.size >= 8, "at least the 8 index journeys split stages")
-    assert(Bench.stageJourneyNames.subsetOf(SparkEntry.queries.keySet),
-      s"unknown stage journeys: ${Bench.stageJourneyNames -- SparkEntry.queries.keySet}")
-    assert(Bench.stageJourneyNames.subsetOf(SparkEntry.integrationQueries),
-      "every stage journey is an integration-tier query")
+  test("integration tier is exactly the scratch-dir-building queries") {
+    // scratch-dir-building queries are exactly the journeys: runJourney
+    // hands each one its dir, and no other body may make one
+    assert(SparkEntry.integrationQueries == SparkEntry.journeys.keySet)
+    val plain = SparkEntry.plainQueries.keySet
+    assert((plain intersect SparkEntry.journeys.keySet).isEmpty,
+      s"both plain and journey: ${plain intersect SparkEntry.journeys.keySet}")
+    assert(SparkEntry.queries.keySet == plain ++ SparkEntry.journeys.keySet)
+    // scratch dirs belong to SparkEntry.runJourney alone: a body that
+    // made its own would be a pure-tier row with filesystem noise, or a
+    // journey that leaks its dir when it throws
+    for (f <- Seq("src/main/scala/graft/CorpusQueries.scala",
+        "src/main/scala/graft/SparkEntry.scala"))
+      assert(!Files.readString(Paths.get(f)).contains("createTempDirectory"),
+        s"$f creates a temp dir in a query body")
   }
 
-  test("integration tier is exactly the scratch-dir-building queries") {
-    val q = SparkEntry.queries.keySet
-    assert((SparkEntry.integrationQueries -- q).isEmpty,
-      s"integration tier names unknown queries: ${SparkEntry.integrationQueries -- q}")
-    // pin membership against the SOURCE: a query body that creates a
-    // scratch temp dir is a machinery journey and must be tiered as
-    // such, else its fs noise pollutes the pure tier's thresholds
-    val entryRe = """"([a-z0-9_]+)" -> \(\(s, dir\)""".r
-    val scratch = Seq("src/main/scala/graft/CorpusQueries.scala",
-      "src/main/scala/graft/SparkEntry.scala").flatMap { f =>
-      val src = Files.readString(Paths.get(f))
-      val entries = entryRe.findAllMatchIn(src).map(m => (m.start, m.group(1))).toSeq
-      entries.zipWithIndex.collect { case ((pos, name), i)
-        if src.substring(pos,
-          if (i + 1 < entries.size) entries(i + 1)._1 else src.length)
-          .contains("createTempDirectory") => name }
-    }.toSet
-    // model-TRAINER journeys carry the same many-small-jobs wall profile
-    // without a scratch dir (k-means rounds, PCA fit); they are allowed
-    // into the tier ONLY by this explicit pinned list
-    val trainerJourneys = Set("sim_recall_board", "sim_hier_m_board")
-    assert((scratch ++ trainerJourneys) == SparkEntry.integrationQueries,
-      s"tier drift — missing: ${(scratch ++ trainerJourneys) -- SparkEntry.integrationQueries}, " +
-        s"stale: ${SparkEntry.integrationQueries -- scratch -- trainerJourneys}")
+  test("a journey that throws after writing leaves no scratch dir behind") {
+    var seen: Option[java.nio.file.Path] = None
+    val failing: SparkEntry.Journey = (s, _, tmp, stage) => {
+      import s.implicits._
+      seen = Some(Paths.get(tmp))
+      stage("build")(Seq(1, 2).toDF("x").write.parquet(tmp + "/landed"))
+      assert(Files.exists(Paths.get(tmp, "landed")))
+      sys.error("boom after landing")
+    }
+    val e = intercept[RuntimeException](
+      SparkEntry.runJourney(failing, spark, "/unused", Stage.none))
+    assert(e.getMessage == "boom after landing")
+    assert(seen.nonEmpty && !Files.exists(seen.get), s"scratch dir leaked: $seen")
+  }
+
+  test("bench stage journeys are pinned, known, integration-tier queries") {
+    // Bench records stages for exactly SparkEntry.journeys
+    val staged = SparkEntry.journeys.keySet
+    assert(staged.size >= 8, "at least the 8 index journeys split stages")
+    assert(staged.subsetOf(SparkEntry.queries.keySet),
+      s"unknown stage journeys: ${staged -- SparkEntry.queries.keySet}")
+    assert(staged.subsetOf(SparkEntry.integrationQueries),
+      "every stage journey is an integration-tier query")
+    // the recorder times a journey's own body and leaves its rows alone
+    val sf = "/root/testdata/sf0.001"
+    val rec = new Bench.StageRecorder
+    val rows = SparkEntry.runJourney(SparkEntry.journeys("q_hist_median_est"), spark, sf, rec)
+      .collect().toSeq
+    val json = rec.json(rows.size)
+    val keys = "\"([a-z_]+)\":".r.findAllMatchIn(json).map(_.group(1)).toSeq
+    assert(keys == Seq("build_sec", "refresh_sec", "serve_sec", "serve_rows"), json)
+    def sec(k: String) = s""""$k":([0-9.eE-]+)""".r.findFirstMatchIn(json).get.group(1).toDouble
+    assert(sec("build_sec") > 0 && sec("serve_sec") > 0, json)
+    assert(rows.nonEmpty && json.contains(s""""serve_rows":${rows.size}"""), json)
+    assert(rows == SparkEntry.queries("q_hist_median_est")(spark, sf).collect().toSeq)
   }
 
   test("declared queries and oracle entries line up") {
